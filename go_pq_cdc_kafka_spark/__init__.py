@@ -24,6 +24,13 @@ No RDDs, no custom Catalyst rules (SURVEY.md §4).
 
 __version__ = "0.1.0"
 
+# Every Spark Python worker imports this package the first time it unpickles
+# engine code; from then on its per-task importlib.invalidate_caches() skips
+# zip archives that did not change (see _zipcache).
+from go_pq_cdc_kafka_spark import _zipcache
+
+_zipcache.install()
+
 from go_pq_cdc_kafka_spark.envelope import (  # noqa: F401
     OP_DELETE,
     OP_INSERT,

@@ -87,9 +87,3 @@ def spread_small_scan(
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register fixture tables as temp views for spark.sql() queries."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)

@@ -181,11 +181,6 @@ BAG_FINGERPRINT_SQL = (
 )
 
 
-def content_hash(col: Column) -> Column:
-    """Exact-duplicate content hash (raw bytes)."""
-    return F.md5(col)
-
-
 def hash64(col: Column) -> Column:
     """Deterministic 60-bit hash shared with DuckDB:
     ``CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)``."""

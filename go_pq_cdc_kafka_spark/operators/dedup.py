@@ -380,12 +380,12 @@ def _banded_with_arrays(
         "concat_ws('|', " + ", ".join(f"mh{b * r + i}" for i in range(r)) + ")"
     )
     bks = "array(" + ", ".join(band_key(b) for b in range(bands)) + ")"
-    return sig.selectExpr(
+    return sig.selectExpr("doc_id", "n_sh", "shs", f"{bks} AS bks").selectExpr(
         "doc_id",
         "n_sh",
         "shs",
-        f"{bks} AS bks",
-        f"posexplode({bks}) AS (band_id, band_key)",
+        "bks",
+        "posexplode(bks) AS (band_id, band_key)",
     )
 
 

@@ -38,12 +38,6 @@ def not_null(col: str) -> Rule:
     return Rule(f"{col}_not_null", F.col(col).isNull())
 
 
-def in_range(col: str, lo, hi) -> Rule:
-    return Rule(
-        f"{col}_in_range", ~F.col(col).between(F.lit(lo), F.lit(hi))
-    )
-
-
 def positive(col: str) -> Rule:
     return Rule(f"{col}_positive", F.col(col) <= 0)
 

@@ -1,11 +1,11 @@
 """Relational operators Spark lacks as single calls, built from DataFrame
-compositions (SURVEY §2.B: as-of join, top-k per group, last-write-wins).
+compositions (SURVEY §2.B: last-write-wins).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 
 def lww_materialize(
@@ -23,73 +23,3 @@ def lww_materialize(
         .filter((F.col("_rn") == 1) & (F.col(op_col) != "DELETE"))
         .drop("_rn")
     )
-
-
-def topk_per_group(
-    df: DataFrame, group_cols: list[str], order_by: list[Column], k: int
-) -> DataFrame:
-    """rank-based top-k per group (no global sort; Catalyst pushes the
-    row_number filter into the window as a TopK per partition)."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_by)
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_value_cols: list[str] | None = None,
-) -> DataFrame:
-    """As-of join: for each left row, the latest right row with
-    ``right_time <= left_time`` for the same key.
-
-    Implemented as a union + single window pass (sort-merge shape) instead
-    of a per-row range scan: tag sides, union on (key, time), carry the last
-    seen right values forward with ``last(..., ignorenulls)`` over rows
-    between unbounded preceding and current — one shuffle on the key, no
-    theta join blow-up. This is the scalable form of pandas ``merge_asof``.
-    """
-    rv = right_value_cols or [c for c in right.columns if c not in (on, right_time)]
-    l_tag = left.withColumn("_side", F.lit(1)).withColumn("_t", F.col(left_time))
-    r_tag = (
-        right.select(
-            F.col(on),
-            F.col(right_time).alias("_t"),
-            *[F.col(c) for c in rv],
-        )
-        .withColumn("_side", F.lit(0))
-    )
-    # align schemas for the union
-    for c in left.columns:
-        if c not in r_tag.columns:
-            r_tag = r_tag.withColumn(c, F.lit(None))
-    for c in rv:
-        if c not in l_tag.columns:
-            l_tag = l_tag.withColumn(c, F.lit(None))
-    unioned = l_tag.select(*l_tag.columns).unionByName(
-        r_tag.select(*l_tag.columns)
-    )
-    # right rows (side=0) sort before left rows at identical timestamps →
-    # a right row AT the left's timestamp is visible to it
-    w = (
-        Window.partitionBy(on)
-        .orderBy(F.col("_t"), F.col("_side"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        *[c for c in left.columns if c not in ("_side", "_t")],
-        "_side",
-        "_t",
-        *[F.last(F.when(F.col("_side") == 0, F.col(c)), ignorenulls=True).over(w).alias(f"_asof_{c}") for c in rv],
-    )
-    out = carried.filter(F.col("_side") == 1).select(
-        *[c for c in left.columns if c not in ("_side", "_t")],
-        *[F.col(f"_asof_{c}").alias(c) for c in rv],
-    )
-    return out

@@ -60,10 +60,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.round(exact_dot(a, b) / (norm(a) * norm(b)), 12)
 
 
-def cosine_sql(a: str, b: str) -> str:
-    return f"ROUND({exact_dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}), 12)"
-
-
 def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine with precomputed norms: the pair-scoring hot path does ONE
     decimal dot instead of three (norms are computed once per vector, not
@@ -199,10 +195,6 @@ def _plane_dot_expr(vec_name: str, signs: list[int]) -> str:
         "CAST(0 AS DECIMAL(38,18)), "
         "(acc, x) -> CAST(acc + x AS DECIMAL(38,18))) AS DOUBLE)"
     )
-
-
-def _plane_dot(vec_name: str, signs: list[int]) -> Column:
-    return F.expr(_plane_dot_expr(vec_name, signs))
 
 
 def rademacher_lsh_buckets(

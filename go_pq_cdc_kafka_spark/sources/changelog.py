@@ -119,8 +119,3 @@ def append_batch(log: DataFrame, path: str) -> None:
     """Append one more batch of events (new files ⇒ new micro-batches for an
     already-running or restarted stream)."""
     log.coalesce(1).sortWithinPartitions("lsn").write.mode("append").parquet(path)
-
-
-def ensure_dir(path: str) -> str:
-    os.makedirs(path, exist_ok=True)
-    return path

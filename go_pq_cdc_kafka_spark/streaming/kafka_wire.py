@@ -479,12 +479,6 @@ def _encode_record_into(
     payload += body
 
 
-def _encode_record(rec: Record, offset_delta: int, ts_delta: int) -> bytes:
-    out = bytearray()
-    _encode_record_into(out, bytearray(), rec, offset_delta, ts_delta)
-    return bytes(out)
-
-
 def encode_record_batch(
     records: list[Record],
     base_timestamp_ms: int | None = None,

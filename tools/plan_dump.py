@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for the headline bench queries (round-13
-optimization evidence): plans/r13/<query>_<tag>.txt.
+"""Dump .explain('formatted') for the headline bench queries (a round's
+optimization evidence): plans/<round>/<query>_<tag>.txt.
 
-Usage: python tools/r13_plans.py <tag> [sf_dir] [query ...]
+Usage: python tools/plan_dump.py <round> <tag> [sf_dir] [query ...]
+
+e.g. ``python tools/plan_dump.py r13 before`` writes plans/r13/*_before.txt.
 """
 
 from __future__ import annotations
@@ -28,6 +30,9 @@ HEADLINE = [
 
 
 def main() -> None:
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_name = sys.argv.pop(1)
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     names = sys.argv[3:] or HEADLINE
@@ -35,8 +40,8 @@ def main() -> None:
     from go_pq_cdc_kafka_spark.queries import REGISTRY
     from go_pq_cdc_kafka_spark.session import get_spark
 
-    spark = get_spark(app_name="r13-plans")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+    spark = get_spark(app_name=f"{round_name}-plans")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_name)
     os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
