@@ -349,6 +349,16 @@ def minhash_signatures(
     return _signatures_from_index(shingle_index(df, text_col, id_col, n), num_perms)
 
 
+def _check_bands(num_perms: int, bands: int) -> None:
+    """Each band key concatenates r = num_perms / bands minhashes; with a
+    remainder, ``num_perms // bands`` truncates and every band key silently
+    drops the trailing permutations."""
+    if bands <= 0 or num_perms % bands:
+        raise ValueError(
+            f"num_perms ({num_perms}) must be a multiple of bands ({bands})"
+        )
+
+
 def _banded_with_arrays(
     df: DataFrame,
     text_col: str,
@@ -514,11 +524,12 @@ def minhash_lsh_pairs(
     build sides. The round-6 sf10 step caught the verification join
     broadcasting the ~100M-row shingle index. All of these relations scale
     with the corpus, so none may ever broadcast, at this or any scale."""
-    r = num_perms // bands
+    _check_bands(num_perms, bands)
     if band_local:
         return _band_local_pairs(
             df, text_col, id_col, num_perms, bands, n, threshold, pair_join
         )
+    r = num_perms // bands
     sh = _pin(shingle_index(df, text_col, id_col, n), persist)
     sig = _pin(_signatures_from_index(sh, num_perms, with_count=True), persist)
     if persist and eager:
@@ -624,6 +635,7 @@ def minhash_lsh_pairs(
 def minhash_lsh_pairs_sql(
     num_perms: int = 16, bands: int = 4, n: int = 3, threshold: float = 0.5
 ) -> str:
+    _check_bands(num_perms, bands)
     r = num_perms // bands
     sh = T.shingles_sql("text", n)
     h30 = f"({T.hash64_sql('shingle')} % {_H30})"
@@ -725,7 +737,7 @@ def minhash_incremental_pairs(
     (uniform md5-derived band keys; batch slice builds, corpus probes);
     verification joins are the same index-probe shape as the full variant.
     """
-    r = num_perms // bands
+    _check_bands(num_perms, bands)
     if band_local:
         bb = _banded_with_arrays(batch, text_col, id_col, num_perms, bands, n)
         cb = _banded_with_arrays(corpus, text_col, id_col, num_perms, bands, n)
@@ -757,6 +769,8 @@ def minhash_incremental_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("new_doc", "dup_of", "jaccard")
         )
+
+    r = num_perms // bands
 
     def _banded(sig: DataFrame) -> DataFrame:
         band_cols = [
@@ -828,6 +842,7 @@ def minhash_incremental_pairs_sql(
     n: int = 3,
     threshold: float = 0.5,
 ) -> str:
+    _check_bands(num_perms, bands)
     r = num_perms // bands
     sh = T.shingles_sql("text", n)
     h30 = f"({T.hash64_sql('shingle')} % {_H30})"

@@ -516,6 +516,18 @@ def _argmax_local(
     §2.3/§2.4). Input partitioning (the caller's corpus spread) flows
     through untouched.
 
+    Bound: the whole table (per key) rides ONE row — k centroids × dim
+    doubles, 8 bytes each, collected to the driver and broadcast. Spark
+    caps a row near 2 GB and a broadcast at 8 GB, but every task also
+    deserializes the row, so in practice keep k·dim within ~10M values
+    (~80 MB per key); past that, train coarser or route per key.
+
+    An empty centroid table yields 0 rows, as the aggregate and window
+    forms did: the global ``groupBy()`` still emits one row with an empty
+    array, which the ``size > 0`` filter drops (a filter on the collected
+    row, not an extra job) instead of assigning every input row a NULL
+    cluster.
+
     Output: ``rows`` + ``_best`` struct; callers project
     ``_best._pick`` (the chosen centroid_id)."""
     gb = cents.groupBy(key) if key else cents.groupBy()
@@ -527,7 +539,7 @@ def _argmax_local(
                 F.col("_centn").alias("cn"),
             )
         ).alias("_carr")
-    )
+    ).filter(F.size("_carr") > 0)
     joined = rows.join(F.broadcast(arr), key) if key else rows.join(F.broadcast(arr))
     best = F.array_max(
         F.transform(

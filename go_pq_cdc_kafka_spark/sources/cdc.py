@@ -15,6 +15,8 @@ source offset, advanced by acks. Spark has no native CDC source (SURVEY
 - :class:`PgWireDataSource` (format name ``"pgwire"``) — the LIVE production
   source: the in-repo walsender wire client (sources/wire.py) pumped through
   the same offset contract, with micro-batch commits acked back to the slot.
+  Its :class:`ReplicationStreamReader` is also the reader of ``pgwire-raw``
+  (sources/raw.py); the two formats differ only in their release step.
 - :class:`PostgresReplicationClient` — the transport-pluggable client both
   paths share (defaults to the wire client; tests inject file/scripted-socket
   frame sources since no Postgres server ships in this environment).
@@ -26,6 +28,7 @@ intra-source parallelism to exploit; Spark distributes everything downstream.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
@@ -56,6 +59,19 @@ def _parse_ts(v: str | None) -> datetime | None:
         ts = datetime.fromisoformat(v)
         _TS_CACHE[v] = ts
     return ts
+
+
+def _row(e: dict) -> tuple:
+    """Envelope event dict → the dynamic envelope's row tuple."""
+    return (
+        e["op"],
+        _parse_ts(e.get("event_time")),
+        e["lsn"],
+        e.get("table_namespace", "public"),
+        e["table_name"],
+        e.get("before"),
+        e.get("after"),
+    )
 
 
 def _rows_to_arrow(rows: list[tuple]):
@@ -136,17 +152,7 @@ class WalFileStreamReader(SimpleDataSourceStreamReader):
                 e = json.loads(line)
                 if e["lsn"] <= after_lsn:
                     continue
-                rows.append(
-                    (
-                        e["op"],
-                        _parse_ts(e.get("event_time")),
-                        e["lsn"],
-                        e.get("table_namespace", "public"),
-                        e["table_name"],
-                        e.get("before"),
-                        e.get("after"),
-                    )
-                )
+                rows.append(_row(e))
                 if limit is not None and len(rows) >= limit:
                     break
         return rows
@@ -180,28 +186,41 @@ class WalFileDataSource(DataSource):
         return WalFileStreamReader(schema, self.options)
 
 
-class PgWireStreamReader(SimpleDataSourceStreamReader):
-    """LIVE replication tail over the wire client (sources/wire.py): the
-    production S1 path, socket to DataFrame with no file in between.
+class ReplicationStreamReader(SimpleDataSourceStreamReader):
+    """LIVE replication tail over the wire client (sources/wire.py): the one
+    reader behind both the ``pgwire`` and ``pgwire-raw`` formats, socket to
+    DataFrame with no file in between.
 
-    A background thread pumps decoded envelope events from the replication
+    A background thread pumps the format's item stream off the replication
     connection into a bounded queue; ``read`` drains whatever arrived
-    within one poll interval (events don't wait for a full batch — the
+    within one poll interval (items don't wait for a full batch — the
     reference flushes on a ticker for the same reason, producer_batch
-    go:53-60). ``commit`` acks the flushed LSN back to the server, which
-    is what advances the slot (B4's contract; Spark calls commit only
-    after the micro-batch is durable, so the server never discards WAL
-    the checkpoint hasn't secured). ``readBetweenOffsets`` replays a
-    committed-but-lost range over a FRESH connection — sound because the
-    un-acked slot still retains that WAL."""
+    go:53-60) and hands it to the format's release step. ``commit`` acks
+    the flushed LSN back to the server, which is what advances the slot
+    (B4's contract; Spark calls commit only after the micro-batch is
+    durable, so the server never discards WAL the checkpoint hasn't
+    secured). ``readBetweenOffsets`` replays a committed-but-lost range
+    over a FRESH connection — sound because the un-acked slot still
+    retains that WAL.
+
+    A format supplies the hooks: ``_items`` (what the pump queues),
+    ``_release`` (a drained list → one Arrow batch and its end LSN) and
+    ``_replay`` (the same release step over a bounded replay stream)."""
+
+    FORMAT = ""
+    #: (option name, default) of the per-read cap on drained items
+    BATCH_OPTION = ("", 0)
 
     def __init__(self, schema: StructType, options: dict) -> None:
         self.dsn = options.get("dsn")
         self.slot = options.get("slot")
         self.publication = options.get("publication")
         if not (self.dsn and self.slot and self.publication):
-            raise ValueError("pgwire source requires options dsn, slot, publication")
-        self.max_events = int(options.get("maxeventsperbatch", 10_000))
+            raise ValueError(
+                f"{self.FORMAT} source requires options dsn, slot, publication"
+            )
+        opt, default = self.BATCH_OPTION
+        self.max_items = int(options.get(opt, default))
         self.start_lsn = int(options.get("startlsn", 0))
         self.poll_secs = float(options.get("pollms", 200)) / 1000.0
         self.create_slot = options.get("createslot", "true") == "true"
@@ -215,29 +234,31 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
         self._conn = None
         self._err: Exception | None = None
         self._retries = 0
+        #: created lazily in _ensure_pump — a threading.Event here would
+        #: break the reader's cloudpickle (Spark pickles the fresh reader
+        #: at stream start; only None/thread-free attrs may exist then).
+        #: Set by stop(): lets the pump exit its backpressure loop even
+        #: when the deque is full (a closed socket is only observed on the
+        #: NEXT read, so a full-queue pump would otherwise spin forever)
+        self._stopping = None
 
     def initialOffset(self) -> dict:
         return {"lsn": self.start_lsn}
 
-    def _client(self, start_lsn: int, keep_conn: bool):
+    def _frames(self, start_lsn: int, on_connect=None, create_slot=False):
+        # looked up on the module at call time, so a patched or wrapped
+        # frame_source_from_dsn takes effect
         from go_pq_cdc_kafka_spark.sources import wire
 
-        def on_connect(conn):
-            if keep_conn:
-                self._conn = conn
-
-        fs = wire.frame_source_from_dsn(
+        return wire.frame_source_from_dsn(
             self.dsn,
             self.slot,
             self.publication,
-            create_slot=self.create_slot,
+            create_slot=create_slot,
             on_connect=on_connect,
             proto_version=self.proto_version,
             streaming=self.streaming,
-        )
-        return PostgresReplicationClient(
-            self.dsn, self.slot, self.publication, frame_source=fs
-        )
+        )(start_lsn)
 
     def _ensure_pump(self, after_lsn: int) -> None:
         if self._thread is not None:
@@ -246,52 +267,62 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
         import threading
         import time as _time
 
-        client = self._client(after_lsn, keep_conn=True)
+        if self._stopping is None:
+            self._stopping = threading.Event()
+        stopping = self._stopping
+
+        def on_connect(conn):
+            self._conn = conn
+
+        items = self._items(
+            self._frames(after_lsn, on_connect, self.create_slot), after_lsn
+        )
         # a GIL-atomic deque, NOT queue.Queue: Queue.get(timeout=...) costs
         # ~30µs/event in lock/condvar machinery, capping the drain at
         # ~30k events/s (measured as the E2E bottleneck by live_bench);
         # deque.append/popleft are lock-free. Backpressure is a soft cap
         # polled by the producer — it must hold at least one full
-        # micro-batch or read() can never assemble max_events rows.
+        # micro-batch or read() can never assemble max_items of them.
         dq: "collections.deque" = collections.deque()
-        cap = max(100_000, 2 * self.max_events)
+        cap = max(100_000, 2 * self.max_items)
 
         def pump() -> None:
+            # HOT LOOP — this single thread must keep realtime pace with
+            # the replication socket: one length test and one deque append
+            # per item on top of what the format's item stream costs
+            append = dq.append
             try:
-                for ev in client.events(after_lsn):
-                    while len(dq) >= cap:
-                        _time.sleep(0.005)
-                    dq.append(ev)
+                for item in items:
+                    if len(dq) >= cap:
+                        while len(dq) >= cap:
+                            if stopping.is_set():
+                                return  # stop() with a full queue: exit
+                            _time.sleep(0.005)
+                    append(item)
             except Exception as e:  # surfaced on the next read()
                 self._err = e
 
-        t = threading.Thread(target=pump, name="pgwire-pump", daemon=True)
+        t = threading.Thread(
+            target=pump, name=f"{self.FORMAT}-pump", daemon=True
+        )
         t.start()
         self._queue, self._thread = dq, t
 
-    @staticmethod
-    def _row(e: dict) -> tuple:
-        return (
-            e["op"],
-            _parse_ts(e.get("event_time")),
-            e["lsn"],
-            e.get("table_namespace", "public"),
-            e["table_name"],
-            e.get("before"),
-            e.get("after"),
-        )
+    def _drain(self, deadline: float) -> list:
+        import time
 
-    #: server-side SQLSTATEs that mean "the connection went away, not that
-    #: the request was wrong" — a real walsender sends these as FATAL
-    #: ErrorResponses (so they surface as WireError, not ConnectionError):
-    #: 57P01 admin_shutdown (pg_terminate_backend / fast shutdown),
-    #: 57P02 crash_shutdown, 57P03 cannot_connect_now (startup/recovery),
-    #: 53300 too_many_connections. The reference reconnects on all of
-    #: them (go-pq-cdc's connection bootstrap retry); auth/protocol/SQL
-    #: errors stay fatal.
-    _RETRYABLE_SQLSTATES = frozenset({"57P01", "57P02", "57P03", "53300"})
+        out: list = []
+        dq = self._queue
+        while len(out) < self.max_items:
+            try:
+                out.append(dq.popleft())
+            except IndexError:
+                if time.monotonic() >= deadline:
+                    break
+                time.sleep(0.005)
+        return out
 
-    def _maybe_restart_pump(self, start_lsn: int) -> None:
+    def _maybe_restart_pump(self) -> None:
         """Transient-vs-fatal classing on a dead pump (the reference's B5
         contract, kafka/reponse_handler.go:13-48): connection drops —
         including server-initiated terminations like pg_terminate_backend,
@@ -306,9 +337,7 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
         err, self._err = self._err, None
         if err is None:
             return  # clean stream end (CopyDone): stay ended
-        fatal_wire = isinstance(err, wire.WireError) and (
-            err.sqlstate not in self._RETRYABLE_SQLSTATES
-        )
+        fatal_wire = isinstance(err, wire.WireError) and not err.transient
         if fatal_wire or self._retries >= self.max_retries:
             raise err
         self._retries += 1
@@ -319,27 +348,16 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
         import time
 
         if self._thread is not None:
-            self._maybe_restart_pump(start["lsn"])
+            self._maybe_restart_pump()
         self._ensure_pump(start["lsn"])
-        rows: list[tuple] = []
-        deadline = time.monotonic() + self.poll_secs
-        dq, row = self._queue, self._row
-        while len(rows) < self.max_events:
-            try:
-                ev = dq.popleft()
-            except IndexError:
-                if time.monotonic() >= deadline:
-                    break
-                time.sleep(0.005)
-                continue
-            rows.append(row(ev))
-        if rows:
-            self._retries = 0  # progress resets the transient budget
-        elif self._err is not None:
-            self._maybe_restart_pump(start["lsn"])
-        if not rows:
+        drained = self._drain(time.monotonic() + self.poll_secs)
+        batch, end_lsn = self._release(drained)
+        if batch is None:
+            if self._err is not None:
+                self._maybe_restart_pump()
             return iter([]), {"lsn": start["lsn"]}
-        return iter([_rows_to_arrow(rows)]), {"lsn": rows[-1][2]}
+        self._retries = 0  # progress resets the transient budget
+        return iter([batch]), {"lsn": end_lsn}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # Spark plans a (start == end) batch whenever an offset didn't
@@ -350,19 +368,15 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
         # driver-side pump is holding (live PG: ERROR 55006) for zero rows.
         if start["lsn"] >= end["lsn"]:
             return iter([])
-        client = self._client(start["lsn"], keep_conn=False)
-        out = []
-        events = client.events(start["lsn"])
+        # a committed range means the pump already created the slot
+        frames = self._frames(start["lsn"])
         try:
-            for ev in events:
-                if ev["lsn"] > end["lsn"]:
-                    break
-                out.append(self._row(ev))
+            batch = self._replay(frames, start["lsn"], end["lsn"])
         finally:
-            # close the generator NOW (not at GC) so the walsender drops
+            # close the stream NOW (not at GC) so the walsender drops
             # the slot before the driver pump (re)dials it
-            events.close()
-        return iter([_rows_to_arrow(out)]) if out else iter([])
+            frames.close()
+        return iter([batch]) if batch is not None else iter([])
 
     def commit(self, end: dict) -> None:
         # micro-batch durable ⇒ advance the slot (sent with the next
@@ -371,9 +385,12 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
             self._conn.ack(end["lsn"])
 
     def stop(self) -> None:
-        """Query teardown: release the slot NOW (see PgRawStreamReader.stop
-        — a lingering pump connection blocks same-slot checkpoint restarts
-        with `replication slot ... is active`)."""
+        """Query teardown: close the walsender connection so the slot is
+        released immediately. Without this the daemon pump thread holds
+        the slot until process exit and a checkpoint-restart of the SAME
+        query (same slot) fails with `replication slot ... is active`."""
+        if self._stopping is not None:
+            self._stopping.set()
         conn, self._conn = self._conn, None
         if conn is not None:
             try:
@@ -382,6 +399,29 @@ class PgWireStreamReader(SimpleDataSourceStreamReader):
                 pass
         self._thread = None
         self._queue = None
+
+
+class PgWireStreamReader(ReplicationStreamReader):
+    """``pgwire``: pgoutput decodes ON THE PUMP THREAD, so the queue holds
+    envelope events and a batch is up to ``maxeventsperbatch`` of them,
+    its offset the last event's LSN."""
+
+    FORMAT = "pgwire"
+    BATCH_OPTION = ("maxeventsperbatch", 10_000)
+
+    def _items(self, frames: Iterator[bytes], after_lsn: int) -> Iterator[dict]:
+        return decoded_events(frames, after_lsn)
+
+    def _release(self, events: list[dict]):
+        if not events:
+            return None, None
+        return _rows_to_arrow([_row(e) for e in events]), events[-1]["lsn"]
+
+    def _replay(self, frames: Iterator[bytes], start_lsn: int, end_lsn: int):
+        events = self._items(frames, start_lsn)
+        return self._release(
+            list(itertools.takewhile(lambda e: e["lsn"] <= end_lsn, events))
+        )[0]
 
 
 class PgWireDataSource(DataSource):
@@ -456,11 +496,18 @@ class PostgresReplicationClient:
         self.frame_source = frame_source
 
     def events(self, start_lsn: int) -> Iterator[dict]:
-        from go_pq_cdc_kafka_spark.sources import pgoutput as PO
+        yield from decoded_events(self.frame_source(start_lsn), start_lsn)
 
-        for ev in PO.decode_replication_stream(self.frame_source(start_lsn)):
-            if ev["lsn"] > start_lsn:
-                yield ev
+
+def decoded_events(frames: Iterator[bytes], after_lsn: int) -> Iterator[dict]:
+    """pgoutput-decoded envelope events of ``frames`` with lsn > ``after_lsn``
+    (the slot replays from its confirmed position, which may precede the
+    resume offset)."""
+    from go_pq_cdc_kafka_spark.sources import pgoutput as PO
+
+    for ev in PO.decode_replication_stream(frames):
+        if ev["lsn"] > after_lsn:
+            yield ev
 
 
 def write_wal_jsonl(events: list[dict], path: str, append: bool = True) -> None:

@@ -3,11 +3,14 @@
 The ``pgwire`` source decodes pgoutput ON THE DRIVER (inside the python
 data-source runner): correct, but every event pays Python decode + row
 build + Arrow conversion under one GIL — measured ceiling ~50k rows/s
-E2E (tools/live_bench.py). This module is the scale tier: the driver
-pump only READS FRAMES off the socket (a tag peek and a header unpack
-per message — I/O bound), ships them as an Arrow binary column, and the
-pgoutput decode runs in EXECUTOR python workers via ``mapInPandas`` —
-parallel across transaction groups, off the driver's GIL.
+E2E (tools/live_bench.py). This module is the scale tier. It runs on the
+same reader as ``pgwire`` (:class:`~go_pq_cdc_kafka_spark.sources.cdc.
+ReplicationStreamReader`: one pump, restart, ack and replay path) and
+supplies only the format's two steps. Its item stream only READS FRAMES
+off the socket (a tag peek per message — I/O bound); its release step
+ships them as an Arrow binary column, and the pgoutput decode runs in
+EXECUTOR python workers via ``mapInPandas`` — parallel across
+transaction groups, off the driver's GIL.
 
 Design contracts:
 
@@ -33,7 +36,10 @@ Design contracts:
   well-formed Begin..DML..Commit slice, and since non-streamed DML
   decode is stateless given the relation registry + Begin's timestamp
   state, the decoded events are identical, only their worker placement
-  changes. Streamed (protocol-v2) transactions always stay whole.
+  changes.
+- **Protocol v1 only**: the release walker closes a transaction on
+  Commit ('C'); a protocol-v2 Stream Commit ('c') would never release, so
+  ``streaming=true`` or ``protoversion`` != 1 fails at construction.
 
 The decoded output is bit-identical to the ``pgwire`` source's envelope
 (tests/live/test_live_pg.py asserts parity on a real server).
@@ -53,7 +59,7 @@ import sys
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -61,6 +67,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from go_pq_cdc_kafka_spark.sources.cdc import ReplicationStreamReader
 
 RAW_FORMAT_NAME = "pgwire-raw"
 
@@ -178,266 +186,124 @@ def _emit_transaction(
     return txgrp + 1
 
 
-class PgRawStreamReader(SimpleDataSourceStreamReader):
-    """Offset = ``{"lsn": <last committed>}`` — always a Commit boundary."""
+def _data_frames(
+    frames: Iterator[bytes], relations: dict[int, bytes]
+) -> Iterator[bytes]:
+    """The raw tier's item stream: XLogData frames, RAW (round 11).
+
+    HOT LOOP on the pump thread — it must keep realtime pace with the
+    replication socket, and every Python op here is paid per frame under
+    the driver GIL. The round-11 stream profile attributed the ~96-106k
+    rows/s ceiling to exactly this path, so the loop does the MINIMUM per
+    frame: one byte test for keepalives, one byte test for Relation.
+    wal_start unpack, the 25-byte header strip, and tuple packing all
+    live elsewhere (unpack in the release walker, the strip all the way
+    in the executor decoders — see decode_raw_frames).
+
+    NO per-frame lsn filter here: the first records of a transaction
+    share wal_start with the PREVIOUS commit (live-PG-verified), so
+    frame-level ``<= offset`` filtering silently drops the head of the
+    first fresh transaction after a resume. Replayed history is discarded
+    per-TRANSACTION by the walker instead."""
+    import struct
+
+    for frame in frames:
+        if frame[0] != 119:  # not XLogData ('w'): keepalive
+            continue
+        if frame[25] == 82:  # Relation: registry only — the batch
+            # preamble replays it to every group, so the data path would
+            # only duplicate it into one group
+            (relid,) = struct.unpack_from(">i", frame, 26)
+            relations[relid] = bytes(frame[25:])
+            continue
+        yield frame
+
+
+class _TxWalker:
+    """Commit-aligned release, the one per-transaction walker behind both
+    ``read`` and ``readBetweenOffsets``: frames gather into the open
+    transaction, and each Commit ('C') either discards it — its commit lsn
+    is <= ``skip_upto``, history the slot replays below the resume offset
+    — or releases it through :func:`_emit_transaction`. Frames after the
+    last Commit stay open for the next walk."""
+
+    def __init__(self, groups: int, split_frames: int, skip_upto: int) -> None:
+        self.groups, self.split_frames = groups, split_frames
+        self.skip_upto = skip_upto
+        self.open_tx: list[bytes] = []
+        self.txgrp = 0
+
+    def walk(self, frames, relations: dict[int, bytes], stop_at: int | None = None):
+        """(Arrow batch, last released commit lsn) — (None, None) when no
+        transaction was released. ``stop_at`` ends the walk at the first
+        released commit with lsn >= it (the replay window's end)."""
+        import struct
+
+        unpack = struct.unpack_from
+        lsns: list[int] = []
+        grps: list[int] = []
+        msgs: list[bytes] = []
+        end_lsn = None
+        for frame in frames:
+            self.open_tx.append(frame)
+            if frame[25] != 67:  # not a Commit
+                continue
+            (wal_start,) = unpack(">q", frame, 1)
+            if wal_start > self.skip_upto:
+                self.txgrp = _emit_transaction(
+                    self.open_tx, lsns, grps, msgs,
+                    self.groups, self.split_frames, self.txgrp,
+                )
+                end_lsn = wal_start
+            self.open_tx = []
+            if stop_at is not None and wal_start >= stop_at:
+                break
+        if end_lsn is None:
+            return None, None
+        return _cols_to_arrow(relations, lsns, grps, msgs, self.groups), end_lsn
+
+
+class PgRawStreamReader(ReplicationStreamReader):
+    """``pgwire-raw``: the pump queues raw XLogData frames (no decode on the
+    driver); offset = ``{"lsn": <last committed>}`` — always a Commit
+    boundary."""
+
+    FORMAT = RAW_FORMAT_NAME
+    BATCH_OPTION = ("maxframesperbatch", 500_000)
 
     def __init__(self, schema: StructType, options: dict) -> None:
-        self.dsn = options.get("dsn")
-        self.slot = options.get("slot")
-        self.publication = options.get("publication")
-        if not (self.dsn and self.slot and self.publication):
+        super().__init__(schema, options)
+        if self.streaming or self.proto_version != 1:
+            # the walker releases on Commit ('C') only: a protocol-v2
+            # Stream Commit ('c') would never release its transaction
             raise ValueError(
-                "pgwire-raw source requires options dsn, slot, publication"
+                f"{RAW_FORMAT_NAME} streams protocol v1 only (got "
+                f"protoversion={self.proto_version}, streaming="
+                f"{str(self.streaming).lower()}); use format pgwire for v2"
             )
-        self.start_lsn = int(options.get("startlsn", 0))
-        self.poll_secs = float(options.get("pollms", 200)) / 1000.0
-        self.max_frames = int(options.get("maxframesperbatch", 500_000))
         self.groups = int(options.get("groups", 8))
         #: transactions with >= this many frames fan out across ALL groups
         #: (bulk-load shape: one huge tx per batch must not pin decode to
         #: a single core); 0 disables splitting
         self.split_frames = int(options.get("splitframes", 4096))
-        self.create_slot = options.get("createslot", "true") == "true"
-        self.max_retries = int(options.get("maxretries", 3))
-        self._dq = None
-        self._thread = None
-        self._conn = None
-        self._err: Exception | None = None
-        self._retries = 0
-        #: created lazily in _ensure_pump — a threading.Event here would
-        #: break the reader's cloudpickle (Spark pickles the fresh reader
-        #: at stream start; only None/thread-free attrs may exist then).
-        #: Set by stop(): lets the pump exit its backpressure loop even
-        #: when the deque is full (a closed socket is only observed on the
-        #: NEXT read, so a full-queue pump would otherwise spin forever)
-        self._stopping = None
         #: raw Relation payloads by relid (replayed to every batch)
         self._relations: dict[int, bytes] = {}
-        #: frames of the currently-open transaction (not yet committed)
-        self._open_tx: list[tuple[int, bytes]] = []
-        self._txgrp = 0
+        self._walker = None
 
-    def initialOffset(self) -> dict:
-        return {"lsn": self.start_lsn}
+    def _items(self, frames: Iterator[bytes], after_lsn: int) -> Iterator[bytes]:
+        # a (re)started pump resumes at the commit-aligned batch start:
+        # partial open transactions are discarded — the slot replays them
+        # whole
+        self._walker = _TxWalker(self.groups, self.split_frames, after_lsn)
+        return _data_frames(frames, self._relations)
 
-    def _ensure_pump(self, after_lsn: int) -> None:
-        if self._thread is not None:
-            return
-        import collections
-        import struct
-        import threading
-        import time as _time
+    def _release(self, frames: list[bytes]):
+        return self._walker.walk(frames, self._relations)
 
-        from go_pq_cdc_kafka_spark.sources import wire
-
-        if self._stopping is None:
-            self._stopping = threading.Event()
-        stopping = self._stopping
-
-        def on_connect(conn):
-            self._conn = conn
-
-        fs = wire.frame_source_from_dsn(
-            self.dsn,
-            self.slot,
-            self.publication,
-            create_slot=self.create_slot,
-            on_connect=on_connect,
-        )
-        dq: "collections.deque" = collections.deque()
-        cap = max(100_000, 2 * self.max_frames)
-
-        def pump() -> None:
-            # HOT LOOP — this single thread must keep realtime pace with
-            # the replication socket, and every Python op here is paid per
-            # frame under the driver GIL. The round-11 stream profile
-            # attributed the ~96-106k rows/s ceiling to exactly this path,
-            # so the loop does the MINIMUM per frame: one byte test for
-            # keepalives, one byte test for Relation, one deque append of
-            # the RAW frame. wal_start unpack, the 25-byte header strip,
-            # and tuple packing all moved off this thread (unpack to
-            # read()'s release loop, the strip all the way into the
-            # executor decoders — see decode_raw_frames).
-            append = dq.append
-            try:
-                for frame in fs(after_lsn):
-                    if frame[0] != 119:  # not XLogData ('w'): keepalive
-                        continue
-                    if frame[25] == 82:  # Relation: registry only — the
-                        # batch preamble replays it to every group, so the
-                        # data path would only duplicate it into one group
-                        (relid,) = struct.unpack_from(">i", frame, 26)
-                        self._relations[relid] = bytes(frame[25:])
-                        continue
-                    # NO per-frame lsn filter here: the first records of a
-                    # transaction share wal_start with the PREVIOUS commit
-                    # (live-PG-verified), so frame-level `<= offset`
-                    # filtering silently drops the head of the first fresh
-                    # transaction after a resume. Replayed history is
-                    # discarded per-TRANSACTION at release time instead
-                    # (read() compares the commit lsn to the resume
-                    # offset).
-                    if len(dq) >= cap:
-                        while len(dq) >= cap:
-                            if stopping.is_set():
-                                return  # stop() with a full queue: exit
-                            _time.sleep(0.005)
-                    append(frame)
-            except Exception as e:  # surfaced on the next read()
-                self._err = e
-
-        t = threading.Thread(target=pump, name="pgraw-pump", daemon=True)
-        t.start()
-        self._dq, self._thread = dq, t
-        #: resume boundary: transactions whose COMMIT lsn is <= this are
-        #: replayed history and must be discarded at release time
-        self._pump_start_lsn = after_lsn
-
-    def _drain(self, deadline: float) -> list[bytes]:
-        import time
-
-        out: list[bytes] = []
-        dq = self._dq
-        while len(out) < self.max_frames:
-            try:
-                out.append(dq.popleft())
-            except IndexError:
-                if time.monotonic() >= deadline:
-                    break
-                time.sleep(0.005)
-        return out
-
-    def _maybe_restart_pump(self) -> None:
-        """Same transient-vs-fatal classing as the pgwire reader
-        (cdc.PgWireStreamReader): connection drops and server-initiated
-        terminations (57P01 etc.) reconnect and resume from the
-        commit-aligned batch-start offset; partial open transactions are
-        discarded — the slot replays them whole."""
-        from go_pq_cdc_kafka_spark.sources import cdc, wire
-
-        if self._thread is None or self._thread.is_alive() or len(self._dq):
-            return
-        err, self._err = self._err, None
-        if err is None:
-            return
-        fatal_wire = isinstance(err, wire.WireError) and (
-            err.sqlstate not in cdc.PgWireStreamReader._RETRYABLE_SQLSTATES
-        )
-        if fatal_wire or self._retries >= self.max_retries:
-            raise err
-        self._retries += 1
-        self._thread = None
-        self._conn = None
-        self._open_tx = []  # replayed whole by the slot on reconnect
-
-    def read(self, start: dict):
-        import struct
-        import time
-
-        if self._thread is not None:
-            self._maybe_restart_pump()
-        self._ensure_pump(start["lsn"])
-        drained = self._drain(time.monotonic() + self.poll_secs)
-
-        lsns: list[int] = []
-        grps: list[int] = []
-        msgs: list[bytes] = []
-        end_lsn = start["lsn"]
-        for frame in drained:
-            self._open_tx.append(frame)
-            if frame[25] == 67:  # Commit: release (or discard) the txn
-                (wal_start,) = struct.unpack_from(">q", frame, 1)
-                if wal_start <= self._pump_start_lsn:
-                    # replayed history below the resume offset
-                    self._open_tx = []
-                    continue
-                self._txgrp = _emit_transaction(
-                    self._open_tx,
-                    lsns,
-                    grps,
-                    msgs,
-                    self.groups,
-                    self.split_frames,
-                    self._txgrp,
-                )
-                self._open_tx = []
-                end_lsn = wal_start
-        if not lsns:
-            return iter([]), {"lsn": start["lsn"]}
-        self._retries = 0  # progress resets the transient budget
-        return (
-            iter([_cols_to_arrow(self._relations, lsns, grps, msgs, self.groups)]),
-            {"lsn": end_lsn},
-        )
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        if start["lsn"] >= end["lsn"]:
-            return iter([])
-        import struct
-
-        from go_pq_cdc_kafka_spark.sources import wire
-
-        fs = wire.frame_source_from_dsn(
-            self.dsn, self.slot, self.publication, create_slot=False
-        )
+    def _replay(self, frames: Iterator[bytes], start_lsn: int, end_lsn: int):
         relations: dict[int, bytes] = {}
-        lsns: list[int] = []
-        grps: list[int] = []
-        msgs: list[bytes] = []
-        open_tx: list[bytes] = []
-        txgrp = 0
-        frames = fs(start["lsn"])
-        try:
-            for frame in frames:
-                if frame[0] != 119:
-                    continue
-                if frame[25] == 82:
-                    (relid,) = struct.unpack_from(">i", frame, 26)
-                    relations[relid] = bytes(frame[25:])
-                    continue
-                open_tx.append(frame)
-                if frame[25] == 67:
-                    (wal_start,) = struct.unpack_from(">q", frame, 1)
-                    # per-TRANSACTION replay window (frame-level lsn
-                    # filtering is wrong: a tx's first records share
-                    # wal_start with the previous commit)
-                    if wal_start <= start["lsn"]:
-                        open_tx = []
-                        continue
-                    txgrp = _emit_transaction(
-                        open_tx, lsns, grps, msgs,
-                        self.groups, self.split_frames, txgrp,
-                    )
-                    open_tx = []
-                    if wal_start >= end["lsn"]:
-                        break
-        finally:
-            frames.close()
-        return (
-            iter([_cols_to_arrow(relations, lsns, grps, msgs, self.groups)])
-            if lsns
-            else iter([])
-        )
-
-    def commit(self, end: dict) -> None:
-        if self._conn is not None and end.get("lsn", 0) > 0:
-            self._conn.ack(end["lsn"])
-
-    def stop(self) -> None:
-        """Query teardown: close the walsender connection so the slot is
-        released immediately. Without this the daemon pump thread holds
-        the slot until process exit and a checkpoint-restart of the SAME
-        query (same slot) fails with `replication slot ... is active`."""
-        if self._stopping is not None:
-            self._stopping.set()
-        conn, self._conn = self._conn, None
-        if conn is not None:
-            try:
-                conn.close()
-            except Exception:
-                pass
-        self._thread = None
-        self._dq = None
+        walker = _TxWalker(self.groups, self.split_frames, start_lsn)
+        return walker.walk(_data_frames(frames, relations), relations, end_lsn)[0]
 
 
 class PgRawDataSource(DataSource):

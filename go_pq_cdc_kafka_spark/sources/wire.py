@@ -134,6 +134,17 @@ def md5_password_response(user: str, password: str, salt: bytes) -> str:
 # ---------------------------------------------------------------------------
 
 
+#: server-side SQLSTATEs that mean "the connection went away, not that
+#: the request was wrong" — a real walsender sends these as FATAL
+#: ErrorResponses (so they surface as WireError, not ConnectionError):
+#: 57P01 admin_shutdown (pg_terminate_backend / fast shutdown),
+#: 57P02 crash_shutdown, 57P03 cannot_connect_now (startup/recovery),
+#: 53300 too_many_connections. The reference reconnects on all of
+#: them (go-pq-cdc's connection bootstrap retry); auth/protocol/SQL
+#: errors stay fatal.
+_RETRYABLE_SQLSTATES = frozenset({"57P01", "57P02", "57P03", "53300"})
+
+
 class WireError(RuntimeError):
     """An ErrorResponse from the server (fields keyed by the protocol's
     single-letter codes: S severity, C sqlstate, M message)."""
@@ -144,6 +155,12 @@ class WireError(RuntimeError):
         super().__init__(
             f"{fields.get('S', 'ERROR')} {self.sqlstate}: {fields.get('M', '?')}"
         )
+
+    @property
+    def transient(self) -> bool:
+        """The server dropped the connection (``_RETRYABLE_SQLSTATES``):
+        a reconnect may succeed where a retry of a bad request cannot."""
+        return self.sqlstate in _RETRYABLE_SQLSTATES
 
 
 class ReplicationConnection:
