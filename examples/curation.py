@@ -50,7 +50,7 @@ def main(spark=None, sf_dir: str = "/root/testdata/sf0.001") -> dict:
 
     # 3. exact dedup, then near-dup pruning via MinHash-LSH pairs
     docs = DD.exact_dedup(docs)
-    pairs = DD.minhash_lsh_pairs(docs, threshold=0.6)
+    pairs = DD.minhash_lsh_pairs(docs, threshold=0.6, rows=stages["input"])
     losers = pairs.select(
         F.greatest("doc_a", "doc_b").alias("doc_id")
     ).distinct()

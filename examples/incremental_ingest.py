@@ -47,9 +47,11 @@ def main(spark=None, sf_dir: str = "/root/testdata/sf0.001") -> dict:
     stages["batch_after_exact"] = batch.count()
 
     # 2. near-dup flags against the EXISTING corpus — cross-set only, the
-    #    corpus is never self-joined here (it is already deduped)
+    #    corpus is never self-joined here (it is already deduped); the
+    #    row count picks the operator's scale regime
     flagged = DD.minhash_incremental_pairs(
-        corpus, batch, num_perms=16, bands=4, threshold=0.5
+        corpus, batch, num_perms=16, bands=4, threshold=0.5,
+        rows=stages["corpus"] + stages["batch_in"],
     )
     stages["flagged_pairs"] = flagged.count()
 

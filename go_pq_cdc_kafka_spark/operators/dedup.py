@@ -27,9 +27,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.storagelevel import StorageLevel
 
 from go_pq_cdc_kafka_spark.functions import text as T
+from go_pq_cdc_kafka_spark.operators import scale
 
 
-def _pin(df: DataFrame, persist: bool) -> DataFrame:
+def _pin(df: DataFrame) -> DataFrame:
     """Persist a subtree that is referenced from multiple join branches.
 
     Without this, whether the branch is computed once is up to ReusedExchange
@@ -37,7 +38,7 @@ def _pin(df: DataFrame, persist: bool) -> DataFrame:
     than OOMs at scale; Spark's LRU evicts under pressure, and a caller
     processing many corpora can drop everything with
     ``spark.catalog.clearCache()``."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 # ---------------------------------------------------------------------------
 # exact / bag dedup
@@ -92,11 +93,13 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    persist: bool = True,
+    *,
+    rows: int,
 ) -> DataFrame:
     """Near-dup pairs by exact n-gram Jaccard, candidates via the inverted
     index (only pairs sharing ≥1 shingle are ever scored). The index feeds
-    the size aggregate and BOTH self-join sides, so it is pinned
+    the size aggregate and BOTH self-join sides, so past the SMALL regime
+    of ``rows`` (the corpus row count, see operators/scale.py) it is pinned
     (see ``_pin``) — tokenization runs once, not three times.
 
     ``max_df`` is the 100-TB safety valve: a shingle appearing in k docs
@@ -136,7 +139,8 @@ def ngram_jaccard_pairs(
             .filter(F.col("_df") <= max_df)
             .drop("_df")
         )
-    sh = _pin(sh, persist)
+    if scale.regime(rows).pin:
+        sh = _pin(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     a, b = sh.alias("a"), sh.hint("merge").alias("b")
     shared = (
@@ -171,7 +175,8 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    persist: bool = True,
+    *,
+    rows: int,
 ) -> DataFrame:
     """Near-dup pairs by n-gram CONTAINMENT — ``shared / min(na, nb)``,
     the asymmetric twin of :func:`ngram_jaccard_pairs` (Broder's
@@ -180,8 +185,8 @@ def ngram_containment_pairs(
     10,000-shingle doc scores J ≈ 0.01 but containment 1.0 — exactly the
     duplication LLM corpora accumulate (articles quoted inside
     aggregator pages, READMEs vendored into monorepos). Same inverted-
-    index candidate generation, same ``max_df`` valve and hint contract
-    as the Jaccard form; only the denominator changes."""
+    index candidate generation, same ``max_df`` valve, ``rows`` regime and
+    hint contract as the Jaccard form; only the denominator changes."""
     sh = shingle_index(df, text_col, id_col, n)
     if max_df is not None:
         # same single-exchange df-cap window as ngram_jaccard_pairs
@@ -192,7 +197,8 @@ def ngram_containment_pairs(
             .filter(F.col("_df") <= max_df)
             .drop("_df")
         )
-    sh = _pin(sh, persist)
+    if scale.regime(rows).pin:
+        sh = _pin(sh)
     sizes = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_sh")
     )
@@ -359,6 +365,41 @@ def _check_bands(num_perms: int, bands: int) -> None:
         )
 
 
+def _bands_sql(num_perms: int, bands: int) -> str:
+    """``array`` of the B band keys, each the concat of r = P/B minhashes."""
+    r = num_perms // bands
+    keys = (
+        "concat_ws('|', " + ", ".join(f"mh{b * r + i}" for i in range(r)) + ")"
+        for b in range(bands)
+    )
+    return "array(" + ", ".join(keys) + ")"
+
+
+def _band_rows(sig: DataFrame, num_perms: int, bands: int) -> DataFrame:
+    """One row per (doc, band) of a signature table: band id, band key and
+    the doc's size ``n_sh``."""
+    return sig.selectExpr(
+        "doc_id",
+        "n_sh",
+        f"posexplode({_bands_sql(num_perms, bands)}) AS (band_id, band_key)",
+    )
+
+
+def _jaccard_at_least(
+    pairs: DataFrame, threshold: float, a: str, b: str
+) -> DataFrame:
+    """``(a, b, jaccard)`` from the pairs' exact ``shared``/``na``/``nb``
+    counts, kept at ``jaccard >= threshold``."""
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.expr("CAST(shared AS DOUBLE) / CAST(na + nb - shared AS DOUBLE)"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
 def _banded_with_arrays(
     df: DataFrame,
     text_col: str,
@@ -372,7 +413,6 @@ def _banded_with_arrays(
     over the distinct index — order nondeterministic and irrelevant,
     array_intersect is set-valued on distinct inputs) and ALL band keys,
     exploded to one row per band."""
-    r = num_perms // bands
     sh = shingle_index(df, text_col, id_col, n)
     hashed = sh.selectExpr(
         "doc_id",
@@ -386,10 +426,7 @@ def _banded_with_arrays(
     aggs.append(F.expr("CAST(count(1) AS BIGINT) AS n_sh"))
     aggs.append(F.expr("collect_list(shingle) AS shs"))
     sig = hashed.groupBy("doc_id").agg(*aggs)
-    band_key = lambda b: (  # noqa: E731
-        "concat_ws('|', " + ", ".join(f"mh{b * r + i}" for i in range(r)) + ")"
-    )
-    bks = "array(" + ", ".join(band_key(b) for b in range(bands)) + ")"
+    bks = _bands_sql(num_perms, bands)
     return sig.selectExpr("doc_id", "n_sh", "shs", f"{bks} AS bks").selectExpr(
         "doc_id",
         "n_sh",
@@ -411,33 +448,23 @@ _FIRST_BAND_SQL = (
 
 
 def _band_local_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perms: int,
-    bands: int,
-    n: int,
+    a: DataFrame, b: DataFrame, cond: str, names: tuple[str, str],
     threshold: float,
-    pair_join: str,
 ) -> DataFrame:
-    """Band-local MinHash verify (see ``minhash_lsh_pairs(band_local=True)``):
-    shingle sets and all band keys ride the banded rows; pairs are emitted
-    at their first matching band and verified map-side. One corpus-keyed
-    aggregation + one band self-join — no candidate distinct, no verify
-    joins, no pins."""
-    banded = _banded_with_arrays(df, text_col, id_col, num_perms, bands, n)
+    """Band-local MinHash verify (the SMALL regime of both MinHash
+    operators): shingle sets and all band keys ride the banded rows
+    (:func:`_banded_with_arrays`); pairs are emitted at their first
+    matching band and verified map-side. One corpus-keyed aggregation per
+    side + one band join — no candidate distinct, no verify joins, no
+    pins. ``cond`` (may be empty) joins the band-key match; ``names``
+    names the two doc-id columns."""
+    on = ["a.band_id = b.band_id", "a.band_key = b.band_key", cond, _FIRST_BAND_SQL]
     cand = (
-        banded.alias("a")
-        .join(
-            banded.hint(pair_join).alias("b"),
-            F.expr(
-                "a.band_id = b.band_id AND a.band_key = b.band_key "
-                f"AND a.doc_id < b.doc_id AND {_FIRST_BAND_SQL}"
-            ),
-        )
+        a.alias("a")
+        .join(b.alias("b"), F.expr(" AND ".join(c for c in on if c)))
         .selectExpr(
-            "a.doc_id AS doc_a",
-            "b.doc_id AS doc_b",
+            f"a.doc_id AS {names[0]}",
+            f"b.doc_id AS {names[1]}",
             # exact shared-shingle count: same distinct strings the
             # verify join chain counted, intersected map-side
             "CAST(size(array_intersect(a.shs, b.shs)) AS BIGINT) AS shared",
@@ -445,14 +472,7 @@ def _band_local_pairs(
             "b.n_sh AS nb",
         )
     )
-    return (
-        cand.withColumn(
-            "jaccard",
-            F.expr("CAST(shared AS DOUBLE) / CAST(na + nb - shared AS DOUBLE)"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_at_least(cand, threshold, *names)
 
 
 def minhash_lsh_pairs(
@@ -463,11 +483,8 @@ def minhash_lsh_pairs(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    persist: bool = True,
-    pair_join: str = "shuffle_hash",
-    eager: bool = True,
-    semi_filter: bool = True,
-    band_local: bool = False,
+    *,
+    rows: int,
 ) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
@@ -476,7 +493,10 @@ def minhash_lsh_pairs(
     verified with exact shingle Jaccard so the output is deterministic and
     threshold-exact (LSH only prunes, never admits).
 
-    ``band_local=True`` (round 13, small-corpus path): the shingle SET and
+    ``rows`` is the corpus row count; it picks the regime
+    (operators/scale.py), which picks the verify path below.
+
+    SMALL regime, band-local verify (round 13): the shingle SET and
     all B band keys ride the banded rows, every candidate pair is emitted
     at its FIRST matching band only (distinct by construction — no pair
     dedup exchange), and exact Jaccard is computed map-side from
@@ -487,14 +507,12 @@ def minhash_lsh_pairs(
     5k/50k/500k docs: the intersect counts the same distinct shingle
     strings the verify join counted). The cost is payload on the band
     exchange — 4× the corpus shingle mass instead of 16 hashes/doc —
-    which is exactly the r11 payload-per-pair trade: measured 2.1× FASTER
-    at ≤50k docs (7.4 → 3.4 s at 50k) and 1.5-2× SLOWER at 500k
-    (40-50 s → 60-109 s), so callers wire it to the same ~100k-doc
-    boundary the persist/semi_filter valves already use, OFF above.
-    ``persist``/``eager``/``semi_filter`` are ignored on this path (it is
-    a single pass with no shared subtrees to pin).
+    which is exactly the r11 payload-per-pair trade: 2.1× faster small,
+    1.5-2× slower at 500k (the SMALL boundary's measurements). A single
+    pass with no shared subtrees to pin.
 
-    Round-12 restructure (results bit-identical, exceptAll-verified):
+    MID and LARGE regimes, join-chain verify. Round-12 restructure
+    (results bit-identical, exceptAll-verified):
 
     - the per-doc size table ``n_sh`` rides the signature groupBy
       (``with_count=True``) instead of a separate aggregation over the
@@ -506,12 +524,12 @@ def minhash_lsh_pairs(
       re-derive it from the signature cache for pennies;
     - shared subtrees referenced from concurrently-submitted join branches
       (signatures, candidates, semi-filtered index) are eagerly
-      materialized after persist when ``eager`` — a merge/hash join
-      submits both input stages at once, and against a lazily-persisted
-      cache BOTH compute the subtree before any block lands (the round-11
-      sf100 event log measured this as twin ~80 s stages on the
-      embedding-cosine path; same class here). ``eager=False`` keeps
-      construction side-effect-free for plan-only inspection.
+      materialized after persist in LARGE — a merge/hash join submits
+      both input stages at once, and against a lazily-persisted cache
+      BOTH compute the subtree before any block lands (the round-11 sf100
+      event log measured this as twin ~80 s stages on the embedding-cosine
+      path; same class here). MID stays lazy, so construction is
+      side-effect-free for plan-only inspection.
 
     The shingle index feeds the signatures AND the verification semi-
     filter; the candidate pairs feed the doc filter plus the verify joins —
@@ -525,19 +543,18 @@ def minhash_lsh_pairs(
     broadcasting the ~100M-row shingle index. All of these relations scale
     with the corpus, so none may ever broadcast, at this or any scale."""
     _check_bands(num_perms, bands)
-    if band_local:
+    rg = scale.regime(rows)
+    if not rg.pin:
+        banded = _banded_with_arrays(df, text_col, id_col, num_perms, bands, n)
         return _band_local_pairs(
-            df, text_col, id_col, num_perms, bands, n, threshold, pair_join
+            banded, banded.hint("shuffle_hash"), "a.doc_id < b.doc_id",
+            ("doc_a", "doc_b"), threshold,
         )
-    r = num_perms // bands
-    sh = _pin(shingle_index(df, text_col, id_col, n), persist)
-    sig = _pin(_signatures_from_index(sh, num_perms, with_count=True), persist)
-    if persist and eager:
+    sh = _pin(shingle_index(df, text_col, id_col, n))
+    sig = _pin(_signatures_from_index(sh, num_perms, with_count=True))
+    if rg.eager:
         # one pass materializes the shingle index AND the signatures
         sig.count()
-    band_key = lambda b: (  # noqa: E731
-        "concat_ws('|', " + ", ".join(f"mh{b * r + i}" for i in range(r)) + ")"
-    )
     # ONE self-equi-join on (band_id, band_key) instead of B separate
     # self-joins: posexplode rewrites B join branches (each of which would
     # recompute the signature subtree) into a single shuffle on a uniform
@@ -548,12 +565,7 @@ def minhash_lsh_pairs(
     # spine removed for 16 bytes/candidate of extra width (na/nb are
     # functionally dependent on the doc ids, so the dedup cardinality is
     # unchanged). Measured at sf0.1: 2.7 → 2.3 s, bit-identical.
-    banded = sig.selectExpr(
-        "doc_id",
-        "n_sh",
-        "posexplode(array(" + ", ".join(band_key(b) for b in range(bands)) + ")) "
-        "AS (band_id, band_key)",
-    )
+    banded = _band_rows(sig, num_perms, bands)
     cand = (
         banded.alias("a")
         .join(
@@ -571,8 +583,8 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    cand = _pin(cand, persist)
-    if persist and eager:
+    cand = _pin(cand)
+    if rg.eager:
         cand.count()
 
     # Verify ONLY the LSH candidates (this is the point of LSH: exact
@@ -587,49 +599,29 @@ def minhash_lsh_pairs(
     # shuffle_hash on the filter side: its pre-explode estimate is tiny
     # (Catalyst doesn't model explode fan-out), so unhinted it could be
     # picked as a broadcast build even when corpus-scaled.
-    # ``semi_filter=False`` (round-12) verifies against the UNFILTERED
-    # pinned index: below ~100k docs the semi join's two extra stages cost
-    # more than the index re-shuffle they avoid (sf0.1 A/B: 2.36 s → 1.95 s,
-    # exceptAll-identical), while at sf10 the filter is a 4x win (round-9:
-    # 94 s → 24 s at 500k docs) — callers switch on corpus size.
-    if semi_filter:
-        cand_docs = cand.selectExpr(
-            "explode(array(doc_a, doc_b)) AS doc_id"
-        )  # no distinct: LEFT SEMI dedups the build side for free
-        shc = _pin(
-            sh.join(cand_docs.hint(pair_join), "doc_id", "semi"), persist
-        )
-        if persist and eager:
-            shc.count()
-    else:
-        shc = sh
-    # pair_join ("shuffle_hash" default): doc-id join keys are uniform
+    cand_docs = cand.selectExpr(
+        "explode(array(doc_a, doc_b)) AS doc_id"
+    )  # no distinct: LEFT SEMI dedups the build side for free
+    shc = _pin(sh.join(cand_docs.hint(rg.pair_join), "doc_id", "semi"))
+    if rg.eager:
+        shc.count()
+    # pair_join is shuffle_hash in MID: doc-id join keys are uniform
     # (no skew-split needed) and the build side is the per-partition
     # slice of the candidate set — LSH-bounded and far smaller than the
     # index it probes, so skipping SMJ's two index sorts wins at <=sf10.
-    # The sf100 sweep (5M docs) caught the hash build dying ("not enough
-    # memory to build hash map"): AQE coalesces the under-estimated
-    # candidate shuffle and one task then has to build the whole slice.
-    # Callers switch to "merge" past ~1M docs — sort-merge spills.
+    # LARGE switches to merge (sort-merge spills; see operators/scale.py).
     # sizes already ride the candidate rows (na/nb grouped through — one
     # value per (doc_a, doc_b) group by construction), so no join against
     # the signature table is needed after the verify aggregate
     shared = (
-        cand.hint(pair_join)
+        cand.hint(rg.pair_join)
         .join(shc.selectExpr("doc_id AS doc_a", "shingle"), "doc_a")
-        .hint(pair_join)
+        .hint(rg.pair_join)
         .join(shc.selectExpr("doc_id AS doc_b", "shingle"), ["doc_b", "shingle"])
         .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.expr("CAST(count(1) AS BIGINT) AS shared"))
     )
-    return (
-        shared.withColumn(
-            "jaccard",
-            F.expr("CAST(shared AS DOUBLE) / CAST(na + nb - shared AS DOUBLE)"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_at_least(shared, threshold, "doc_a", "doc_b")
 
 
 def minhash_lsh_pairs_sql(
@@ -703,22 +695,21 @@ def minhash_incremental_pairs(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    persist: bool = True,
-    band_local: bool = False,
+    *,
+    rows: int,
 ) -> DataFrame:
     """Cross-set near-dup detection: which NEW documents duplicate the
     EXISTING corpus? Returns ``(new_doc, dup_of, jaccard)`` pairs at
     ``jaccard >= threshold``; the batch's survivors are its anti-join
     against ``new_doc``.
 
-    ``band_local=True`` (round 13, small-corpus path — same trade as
-    ``minhash_lsh_pairs(band_local=True)``): shingle sets and band keys
-    ride both sides' band rows, pairs surface at their first matching
-    band only, and exact Jaccard is computed map-side — the candidate
-    distinct and both verify joins disappear. Callers wire it to the same
-    ~100k-doc boundary; above it the band-exchange payload loses to the
-    join chain. ``persist`` is ignored on this path (single pass, no
-    shared subtrees).
+    ``rows`` is the corpus row count; its regime (operators/scale.py)
+    picks the verify path, as in :func:`minhash_lsh_pairs`. SMALL is
+    band-local (round 13): shingle sets and band keys ride both sides'
+    band rows, pairs surface at their first matching band only, and exact
+    Jaccard is computed map-side — the candidate distinct and both verify
+    joins disappear (single pass, no shared subtrees). MID and LARGE run
+    the join chain below over pinned shingle indexes.
 
     This is the shape a continuously-ingesting pipeline actually runs —
     full-corpus pair generation (:func:`minhash_lsh_pairs`) is the
@@ -738,61 +729,28 @@ def minhash_incremental_pairs(
     verification joins are the same index-probe shape as the full variant.
     """
     _check_bands(num_perms, bands)
-    if band_local:
-        bb = _banded_with_arrays(batch, text_col, id_col, num_perms, bands, n)
-        cb = _banded_with_arrays(corpus, text_col, id_col, num_perms, bands, n)
-        cand = (
-            bb.alias("a")
-            .hint("shuffle_hash")
-            .join(
-                cb.alias("b"),
-                F.expr(
-                    "a.band_id = b.band_id AND a.band_key = b.band_key "
-                    f"AND {_FIRST_BAND_SQL}"
-                ),
-            )
-            .selectExpr(
-                "a.doc_id AS new_doc",
-                "b.doc_id AS dup_of",
-                "CAST(size(array_intersect(a.shs, b.shs)) AS BIGINT) AS shared",
-                "a.n_sh AS na",
-                "b.n_sh AS nb",
-            )
+    if not scale.regime(rows).pin:
+        return _band_local_pairs(
+            _banded_with_arrays(
+                batch, text_col, id_col, num_perms, bands, n
+            ).hint("shuffle_hash"),
+            _banded_with_arrays(corpus, text_col, id_col, num_perms, bands, n),
+            "", ("new_doc", "dup_of"), threshold,
         )
-        return (
-            cand.withColumn(
-                "jaccard",
-                F.expr(
-                    "CAST(shared AS DOUBLE) / CAST(na + nb - shared AS DOUBLE)"
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("new_doc", "dup_of", "jaccard")
-        )
-
-    r = num_perms // bands
-
-    def _banded(sig: DataFrame) -> DataFrame:
-        band_cols = [
-            F.concat_ws("|", *[F.col(f"mh{b * r + i}") for i in range(r)])
-            for b in range(bands)
-        ]
-        return sig.select(
-            "doc_id",
-            "n_sh",
-            F.posexplode(F.array(*band_cols)).alias("band_id", "band_key"),
-        )
-
-    csh = _pin(shingle_index(corpus, text_col, id_col, n), persist)
-    bsh = _pin(shingle_index(batch, text_col, id_col, n), persist)
+    csh = _pin(shingle_index(corpus, text_col, id_col, n))
+    bsh = _pin(shingle_index(batch, text_col, id_col, n))
     # round 12 (mirrors minhash_lsh_pairs): per-doc sizes ride the
     # signature groupBy (`with_count=True`) and the band rows, so the two
     # separate count aggregations over index mass — and the two
     # post-verify size joins — are gone. The signatures read the PINNED
     # indexes and each feed exactly one consumer (the band explode), so
     # they need no pin of their own.
-    cb = _banded(_signatures_from_index(csh, num_perms, with_count=True))
-    bb = _banded(_signatures_from_index(bsh, num_perms, with_count=True))
+    cb = _band_rows(
+        _signatures_from_index(csh, num_perms, with_count=True), num_perms, bands
+    )
+    bb = _band_rows(
+        _signatures_from_index(bsh, num_perms, with_count=True), num_perms, bands
+    )
     # n_sh rides the band probe (round 12, same as minhash_lsh_pairs): the
     # candidate set carries both sizes, so the two post-verify size joins
     # are gone — the pair spine shuffles twice less for 16 bytes/row
@@ -823,15 +781,7 @@ def minhash_incremental_pairs(
         .groupBy("new_doc", "dup_of", "na", "nb")
         .agg(F.count(F.lit(1)).cast("long").alias("shared"))
     )
-    return (
-        shared.withColumn(
-            "jaccard",
-            F.col("shared").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_doc", "dup_of", "jaccard")
-    )
+    return _jaccard_at_least(shared, threshold, "new_doc", "dup_of")
 
 
 def minhash_incremental_pairs_sql(

@@ -17,6 +17,9 @@ import hashlib
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+from pyspark.storagelevel import StorageLevel
+
+from go_pq_cdc_kafka_spark.operators import scale
 
 # ---------------------------------------------------------------------------
 # exact (decimal-deterministic) vector algebra
@@ -262,9 +265,8 @@ def cosine_dedup_pairs(
     planes: int = 2,
     id_col: str = "vec_id",
     vec: str = "embedding",
-    persist: bool = True,
-    pair_join: str = "shuffle_hash",
-    eager: bool = True,
+    *,
+    rows: int,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (the fifth dedup flavor): self-join
     restricted to LSH buckets instead of all |N|² pairs; each candidate pair
@@ -278,13 +280,15 @@ def cosine_dedup_pairs(
     ``aggregate`` LONG fold per candidate pair, so the cosine is that of
     the quantized vectors (error ~1e-6 — far below any dedup threshold)
     but EXACT and engine-identical at every step. The quantized-array
-    table is persisted (a hard barrier): Catalyst collapses projection-
-    level vector math PAST joins and re-evaluates it per candidate pair —
-    measured 6x the whole query when norms collapsed that way — and
-    ReusedExchange matching is plan-shape luck, not a contract. Norms ride
-    the SAME two pair joins instead of a norms broadcast: a norms table is
-    corpus-scaled (O(N) rows), so broadcasting it is exactly the
-    mis-broadcast the hint policy bans at scale.
+    table is persisted and eagerly built (a hard barrier): Catalyst
+    collapses projection-level vector math PAST joins and re-evaluates it
+    per candidate pair — measured 6x the whole query when norms collapsed
+    that way — and ReusedExchange matching is plan-shape luck, not a
+    contract. Norms ride the SAME two pair joins instead of a norms
+    broadcast: a norms table is corpus-scaled (O(N) rows), so broadcasting
+    it is exactly the mis-broadcast the hint policy bans at scale.
+    ``rows`` is the corpus row count; its regime (operators/scale.py)
+    picks the self-join hint.
 
     Shape history, each step bought by a scale measurement:
 
@@ -357,24 +361,15 @@ def cosine_dedup_pairs(
             "(acc, x) -> acc + x * x) AS DOUBLE))"
         ).alias("_n"),
     )
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        qvb = qvb.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            # materialize NOW: a merge self-join submits its two sort
-            # stages concurrently, and against a lazily-persisted cache
-            # BOTH stages compute the quantize+bucket+norm projection
-            # before any block is stored (measured as twin ~80 s stages
-            # in the round-11 sf100 event log). One eager pass builds the
-            # cache once; the count is a bounded scalar action of the
-            # same class the callers already use for corpus sizing.
-            # Pass eager=False for plan-only inspection (EXPLAIN, plan
-            # tests, oracle-harness setup) — construction then stays
-            # side-effect-free at the cost of the duplicated first
-            # computation if the plan IS later executed (round-11
-            # advice).
-            qvb.count()
+    qvb = qvb.persist(StorageLevel.MEMORY_AND_DISK)
+    # materialize NOW: a merge self-join submits its two sort stages
+    # concurrently, and against a lazily-persisted cache BOTH stages
+    # compute the quantize+bucket+norm projection before any block is
+    # stored (measured as twin ~80 s stages in the round-11 sf100 event
+    # log). One eager pass builds the cache once; the count is a bounded
+    # scalar action of the same class the callers already use for corpus
+    # sizing.
+    qvb.count()
     # both sides derive from qvb: RENAME the bucket per side — an
     # un-renamed self-join condition resolves to one attribute and folds
     # to literal true (accidental all-pairs; caught by the round-11
@@ -387,14 +382,13 @@ def cosine_dedup_pairs(
         F.col("_id").alias("vec_b"), F.col("_qx").alias("_xb"),
         F.col("_n").alias("_nb"), F.col("bucket").alias("bucket_b"),
     )
-    # pair_join picks the self-join strategy: shuffle_hash at <=1M vectors
-    # (skips SMJ's sorts; the per-partition build slice is corpus/N_part —
-    # MBs), merge beyond (spills gracefully; the sf100 SHJ hash build died
-    # on an AQE-coalesced partition in the round-10 id-keyed shape, and
-    # the same caution applies to any corpus-scaled build side).
+    # the regime's pair_join picks the self-join strategy: shuffle_hash
+    # up to LARGE (skips SMJ's sorts; the per-partition build slice is
+    # corpus/N_part — MBs), merge in LARGE (spills gracefully; see
+    # operators/scale.py).
     return (
         aa.join(
-            bb.hint(pair_join),
+            bb.hint(scale.regime(rows).pair_join),
             (F.col("bucket_a") == F.col("bucket_b"))
             & (F.col("vec_a") < F.col("vec_b")),
         )

@@ -1021,6 +1021,18 @@ from go_pq_cdc_kafka_spark.functions import text as T  # noqa: E402
 from go_pq_cdc_kafka_spark.operators import dedup as DD  # noqa: E402
 from go_pq_cdc_kafka_spark.operators import similarity as SIM  # noqa: E402
 
+
+def _counted_scan(
+    spark: SparkSession, sf_dir: str, table: str = "documents",
+    key_cols: tuple[str, ...] | None = None,
+) -> tuple[int, DataFrame]:
+    """(row count, spread scan) of a corpus table: the ``rows`` the scale
+    policy (operators/scale.py) reads. The count runs on the BARE scan,
+    before the spread repartition, so it stays a footer-only metadata job."""
+    raw = load_table(spark, sf_dir, table)
+    return raw.count(), spread_small_scan(raw, key_cols=key_cols)
+
+
 # Session-scoped materialization of the valved near-dup pair index.
 # Four registry queries (maxdf pairs, cluster resolve, BFS, leakage-safe
 # split) consume the IDENTICAL (threshold, max_df) pair graph, and pair
@@ -1045,15 +1057,13 @@ def _valved_pairs(
             del _PAIR_INDEX_CACHE[k]
         if len(_PAIR_INDEX_CACHE) > 8:
             _PAIR_INDEX_CACHE.clear()
-        raw = load_table(spark, sf_dir, "documents")
-        n = raw.count()  # footer-only metadata job
-        d = spread_small_scan(raw)
+        n, d = _counted_scan(spark, sf_dir)
         # the result is eagerly checkpointed for the four consumer
         # queries, so the operator's internal pins only ever serve this
-        # ONE build — below the ~100k-doc boundary they are pure barrier
-        # cost (and linger uselessly after the checkpoint)
+        # ONE build — in the SMALL regime they are pure barrier cost (and
+        # would linger uselessly after the checkpoint)
         df = DD.ngram_jaccard_pairs(
-            d, threshold=threshold, max_df=max_df, persist=n > 100_000
+            d, threshold=threshold, max_df=max_df, rows=n
         ).localCheckpoint(eager=True)
         _PAIR_INDEX_CACHE[key] = df
     return df
@@ -1166,17 +1176,10 @@ def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shingle index (no all-pairs scan).",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = load_table(spark, sf_dir, "documents")
-    n = raw.count()  # footer-only metadata job
-    d = spread_small_scan(raw)
-    # pins defend against re-deriving the corpus-scaled shingle index
-    # (3 consumers); below ~100k docs the three materialization barriers
-    # cost more than the recompute they avoid (round-12 A/B at 5k docs:
-    # 1.73 → 1.23 s, bit-identical) — same boundary as the minhash
-    # semi_filter switch
-    return DD.ngram_jaccard_pairs(
-        d, threshold=0.5, persist=n > 100_000
-    ).orderBy("doc_a", "doc_b")
+    n, d = _counted_scan(spark, sf_dir)
+    return DD.ngram_jaccard_pairs(d, threshold=0.5, rows=n).orderBy(
+        "doc_a", "doc_b"
+    )
 
 
 @register(
@@ -1208,39 +1211,9 @@ def dedup_ngram_jaccard_maxdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Jaccard verification.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = load_table(spark, sf_dir, "documents")
-    # sf100 lesson (same class as dedup_embedding_cosine): past ~1M docs
-    # the hinted shuffle-hash verification joins can exceed one task's
-    # hash-build budget after AQE coalesces the under-estimated candidate
-    # shuffle; sort-merge spills gracefully there. Count BEFORE the
-    # spread repartition so it stays a footer-only metadata job.
-    n = raw.count()
-    d = spread_small_scan(raw, key_cols=("doc_id",))
-    # eager rides the same switch: below ~1M docs the three materialization
-    # barriers cost more than the duplicated cheap subtrees they prevent
-    # (round-12 A/B: 2.0 s lazy vs 2.3 s eager at sf0.1); past it the
-    # race duplicates corpus-scale passes (round-11 sf100 event log: twin
-    # ~80 s stages), so serialize the cache builds.
+    n, d = _counted_scan(spark, sf_dir, key_cols=("doc_id",))
     return DD.minhash_lsh_pairs(
-        d, num_perms=16, bands=4, threshold=0.5,
-        pair_join="merge" if n > 1_000_000 else "shuffle_hash",
-        eager=n > 1_000_000,
-        # the candidate-doc semi filter pays for itself once the index is
-        # big enough that re-shuffling it dominates two extra stages
-        # (round-9 sf10: 4x win at 500k docs; round-12 sf0.1: 0.4 s cost
-        # at 5k docs) — switch well below the measured-win scale
-        semi_filter=n > 100_000,
-        # pins ride the same boundary: they defend against re-deriving
-        # the corpus-scaled index/signature subtrees, and below it the
-        # materialization barriers cost more than the recompute (round-12
-        # A/B at 5k docs: 1.88 → 1.23 s, bit-identical)
-        persist=n > 100_000,
-        # round 13: below the same boundary the whole verify subsystem is
-        # replaced by a map-side array_intersect on band rows carrying the
-        # shingle sets (2.1x at 50k docs, result-identical); above it the
-        # band-exchange payload loses to the join chain (500k-doc A/B:
-        # 40-50 s vs 60-109 s) so the verify joins stand
-        band_local=n <= 100_000,
+        d, num_perms=16, bands=4, threshold=0.5, rows=n
     ).orderBy("doc_a", "doc_b")
 
 
@@ -1603,25 +1576,15 @@ def _cosine_planes(n: int) -> int:
     "matching the static SQL twin).",
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = load_table(spark, sf_dir, "embeddings")
-    # bounded scalar action (one row-count job over parquet metadata) —
-    # the same class of driver-side scalar the IVF centroid table uses;
-    # count the BARE scan so it stays a footer-only metadata job
-    n = base.count()
-    # keyed spread (round 12): the quantize+bucket+norm projection that
-    # cosine_dedup_pairs eagerly materializes fuses into the scan stage,
-    # which plans ONE task over the single-row-group fixture; vec_id and
-    # embedding are both consumed downstream so nothing prunable is lost.
-    # No-op at real splits.
-    e = spread_small_scan(base, key_cols=("vec_id",))
-    planes = _cosine_planes(n)
-    # sf100 lesson: past ~1M vectors the hinted shuffle-hash scoring joins
-    # can hit a >1 GB single-task hash build (AQE coalesces the candidate
-    # side on an under-estimate); sort-merge spills gracefully there and
-    # costs nothing measurable at the sizes where SHJ also works.
+    # the count is a bounded scalar action (one row-count job over parquet
+    # metadata) — the same class of scalar the IVF centroid table uses. Keyed spread (round 12): the quantize+bucket+norm
+    # projection that cosine_dedup_pairs eagerly materializes fuses into
+    # the scan stage, which plans ONE task over the single-row-group
+    # fixture; vec_id and embedding are both consumed downstream so
+    # nothing prunable is lost. No-op at real splits.
+    n, e = _counted_scan(spark, sf_dir, "embeddings", key_cols=("vec_id",))
     return SIM.cosine_dedup_pairs(
-        e, dim=64, threshold=0.4, planes=planes,
-        pair_join="merge" if n > 1_000_000 else "shuffle_hash",
+        e, dim=64, threshold=0.4, planes=_cosine_planes(n), rows=n
     ).orderBy("vec_a", "vec_b")
 
 
@@ -6715,21 +6678,14 @@ def sample_token_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(batch) + bounded probes, independent of corpus size.",
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = load_table(spark, sf_dir, "documents")
-    n = raw.count()  # footer-only metadata job (before the spread)
-    d = spread_small_scan(raw)
+    n, d = _counted_scan(spark, sf_dir)
     return DD.minhash_incremental_pairs(
         d.filter(F.col("doc_id") % 4 != 0),
         d.filter(F.col("doc_id") % 4 == 0),
         num_perms=16,
         bands=4,
         threshold=0.5,
-        # same ~100k-doc boundary as dedup_minhash_lsh: below it the
-        # band-local verify (map-side array_intersect) replaces the
-        # candidate distinct and both verify joins; above it the
-        # band-exchange payload loses (round-13 500k-doc A/B)
-        persist=n > 100_000,
-        band_local=n <= 100_000,
+        rows=n,
     ).orderBy("new_doc", "dup_of")
 
 
@@ -7830,13 +7786,9 @@ def cdc_outbox_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contract as the Jaccard form; only the denominator changes.",
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = load_table(spark, sf_dir, "documents")
-    n = raw.count()  # footer-only metadata job
-    d = spread_small_scan(raw)
-    # same persist valve as dedup_ngram_jaccard (round-12 A/B at 5k docs:
-    # 1.69 → 1.09 s, bit-identical)
+    n, d = _counted_scan(spark, sf_dir)
     return DD.ngram_containment_pairs(
-        d, threshold=0.5, max_df=64, persist=n > 100_000
+        d, threshold=0.5, max_df=64, rows=n
     ).orderBy("doc_a", "doc_b")
 
 

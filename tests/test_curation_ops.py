@@ -370,7 +370,7 @@ def test_incremental_minhash_flags_batch_dups_only(spark):
         "doc_id long, text string",
     )
     pairs = DD.minhash_incremental_pairs(
-        corpus, batch, num_perms=16, bands=4, threshold=0.5
+        corpus, batch, num_perms=16, bands=4, threshold=0.5, rows=4
     ).collect()
     got = {(r.new_doc, r.dup_of) for r in pairs}
     assert got == {(100, 1)}
@@ -394,7 +394,10 @@ def test_incremental_minhash_never_pairs_within_sets(spark):
         "doc_id long, text string",
     )
     assert (
-        DD.minhash_incremental_pairs(corpus, batch, threshold=0.1).count() == 0
+        DD.minhash_incremental_pairs(
+            corpus, batch, threshold=0.1, rows=3
+        ).count()
+        == 0
     )
 
 

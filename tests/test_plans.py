@@ -153,29 +153,6 @@ def test_cosine_dedup_pair_scoring_reads_pinned_quantized_arrays(spark):
     assert "zip_with" in plan and "aggregate(" in plan
 
 
-def test_minhash_lsh_pin_valve(spark):
-    # Round-12 persist valve: past ~100k docs the shingle index and banded
-    # signatures are persisted so every branch reads the cache
-    # (InMemoryTableScan — single tokenization by contract, not by
-    # ReusedExchange luck); at oracle SF the pins are skipped — the
-    # materialization barriers cost more than the recompute they avoid
-    # (1.88 → 1.23 s at 5k docs, bit-identical).
-    from go_pq_cdc_kafka_spark.operators import dedup as DD
-    from go_pq_cdc_kafka_spark.queries import load_table
-
-    d = load_table(spark, SF, "documents")
-    pinned = DD.minhash_lsh_pairs(d, eager=False, persist=True)
-    qe = pinned._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    assert "InMemoryTableScan" in qe.explainString(mode)
-    if not AT_SCALE:
-        # the small-SF query path takes the unpinned branch
-        assert "InMemoryTableScan" not in plan_of(spark, "dedup_minhash_lsh")
-        assert "InMemoryTableScan" not in plan_of(spark, "dedup_ngram_jaccard")
-
-
 def test_semantic_dedup_pins_members_and_avoids_cartesian(spark):
     # the assigned-members frame feeds both self-join sides AND the final
     # kept-flag join — persisted by contract (InMemoryTableScan), and the
@@ -591,16 +568,25 @@ def test_rp_topk_broadcasts_queries_both_stages(spark):
     )
 
 
-def test_incremental_minhash_never_broadcasts_corpus(spark):
+def test_incremental_minhash_never_broadcasts_corpus(spark, monkeypatch):
     """Batch-vs-corpus dedup: both shingle indexes and band tables scale
-    with their inputs, so nothing may broadcast (Catalyst's static stats
-    don't model explode fan-out — same trap the round-6 sf10 step caught in
-    the full-corpus variant); the pinned indexes must be reused."""
-    plan = plan_of(spark, "dedup_incremental_minhash")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "InMemoryTableScan" in plan
+    with their inputs, so nothing may broadcast in any scale regime
+    (Catalyst's static stats don't model explode fan-out — same trap the
+    round-6 sf10 step caught in the full-corpus variant); on the join
+    chain the pinned indexes must be reused. The oracle SF runs the
+    band-local SMALL regime, which pins nothing, so the join chain is
+    forced through ``scale.regime``."""
+    from go_pq_cdc_kafka_spark.operators import scale
+
+    small = plan_of(spark, "dedup_incremental_minhash")
+    monkeypatch.setattr(scale, "regime", lambda rows: scale.MID)
+    mid = plan_of(spark, "dedup_incremental_minhash")
+    spark.catalog.clearCache()
+    for plan in (small, mid):
+        assert "CartesianProduct" not in plan
+        assert "BroadcastHashJoin" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+    assert "InMemoryTableScan" in mid
 
 
 def test_quality_classifier_broadcasts_model_and_aggregates_partial(spark):

@@ -3,8 +3,8 @@
 Each optimization changed an operator's internals while keeping results
 bit-identical; these tests pin (a) the new plan shapes — deterministic-hash
 spread, single shared window/sort exchange, probe-side spread under
-broadcast joins, semi-filter bypass — and (b) result identity for the
-restructured MinHash verify path.
+broadcast joins — and (b) result identity for the restructured MinHash
+verify path (its per-regime tests live in test_minhash_pairs.py).
 """
 
 import os
@@ -75,19 +75,6 @@ def test_pricing_summary_filter_still_pushed(spark):
     assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters:")[1].splitlines()[0]
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "l_comment" not in read_schema and "l_partkey" not in read_schema
-
-
-def test_minhash_semi_filter_bypass_is_result_identical(spark):
-    """semi_filter only prunes the verification input — never the answer."""
-    d = spread_small_scan(
-        load_table(spark, SF, "documents"), key_cols=("doc_id",)
-    )
-    kw = dict(num_perms=16, bands=4, threshold=0.5, eager=False)
-    with_semi = DD.minhash_lsh_pairs(d, semi_filter=True, **kw)
-    without = DD.minhash_lsh_pairs(d, semi_filter=False, **kw)
-    assert with_semi.exceptAll(without).count() == 0
-    assert without.exceptAll(with_semi).count() == 0
-    spark.catalog.clearCache()
 
 
 def test_minhash_signature_carries_exact_sizes(spark):

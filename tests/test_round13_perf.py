@@ -211,48 +211,3 @@ def test_hierarchical_assign_maplocal_matches_joined_form(spark):
     )
     assert new.exceptAll(final).count() == 0
     assert final.exceptAll(new).count() == 0
-
-
-def test_minhash_band_local_matches_join_chain(spark):
-    """band_local=True (shingle sets on band rows, first-matching-band
-    emission, map-side array_intersect verify) must be result-identical
-    to the join-chain verify, and must plan no pair distinct."""
-    from go_pq_cdc_kafka_spark.operators import dedup as DD
-
-    d = load_table(spark, SF, "documents")
-    old = DD.minhash_lsh_pairs(
-        d, persist=False, eager=False, semi_filter=False
-    )
-    new = DD.minhash_lsh_pairs(
-        d, persist=False, eager=False, semi_filter=False, band_local=True
-    )
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
-    plan = _plan(new)
-    # the verify subsystem is gone: exactly one self-join, no semi join
-    # (formatted plans name each operator once in the tree and once in
-    # the detail list — count the numbered detail headers)
-    import re
-
-    assert "LeftSemi" not in plan
-    joins = re.findall(
-        r"^\(\d+\) (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)",
-        plan,
-        re.M,
-    )
-    assert len(joins) == 1, joins
-
-
-def test_minhash_incremental_band_local_matches_join_chain(spark):
-    """Cross-set band_local verify == the join-chain verify."""
-    from go_pq_cdc_kafka_spark.operators import dedup as DD
-
-    d = load_table(spark, SF, "documents")
-    corpus = d.filter(F.col("doc_id") % 4 != 0)
-    batch = d.filter(F.col("doc_id") % 4 == 0)
-    old = DD.minhash_incremental_pairs(corpus, batch, persist=False)
-    new = DD.minhash_incremental_pairs(
-        corpus, batch, persist=False, band_local=True
-    )
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0

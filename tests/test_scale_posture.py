@@ -184,3 +184,58 @@ def test_no_unbounded_single_partition_window_or_product_join_in_plans(spark):
         "scale-killer shape in a physical plan (unbounded global window "
         "or product join):\n" + "\n".join(offenders)
     )
+
+
+#: the dedup operators whose strategy comes from operators/scale.py, and the
+#: per-call knobs that policy replaced
+SCALED_OPERATORS = {
+    "minhash_lsh_pairs", "minhash_incremental_pairs", "ngram_jaccard_pairs",
+    "ngram_containment_pairs", "cosine_dedup_pairs",
+}
+REMOVED_KNOBS = {"persist", "pair_join", "eager", "semi_filter", "band_local"}
+#: the regime boundaries; only operators/scale.py may compare against them
+BOUNDARIES = {100_000, 1_000_000}
+
+
+def test_scale_policy_lives_in_one_module():
+    """A size switch is one policy (operators/scale.py), not a literal row
+    threshold at each call site: outside that module no code compares
+    against a regime boundary, and no caller hands one of the five dedup
+    operators a strategy knob — they take ``rows`` and read the regime.
+    Boundary literals used as arithmetic (``h % 1_000_000``, a
+    fixed-point ``scale=``) stay legal; only comparisons are switches."""
+    import ast
+
+    repo = os.path.dirname(PKG)
+    paths = [os.path.join(PKG, "queries.py")]
+    for sub in (os.path.join(PKG, "operators"), os.path.join(repo, "tools"),
+                os.path.join(repo, "examples")):
+        paths += [os.path.join(sub, f) for f in sorted(os.listdir(sub))
+                  if f.endswith(".py") and f != "scale.py"]
+    violations = []
+    for path in paths:
+        rel = os.path.relpath(path, repo)
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Compare):
+                operands = [node.left, *node.comparators]
+                if any(isinstance(o, ast.Constant) and o.value in BOUNDARIES
+                       for o in operands):
+                    violations.append(
+                        f"{rel}:{node.lineno}: threshold {ast.unparse(node)}"
+                    )
+            elif isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                    fn, "id", None
+                )
+                knobs = {k.arg for k in node.keywords} & REMOVED_KNOBS
+                if name in SCALED_OPERATORS and knobs:
+                    violations.append(
+                        f"{rel}:{node.lineno}: {name}({', '.join(sorted(knobs))}=...)"
+                    )
+    assert not violations, (
+        "size switch outside operators/scale.py (pass rows= and read "
+        "scale.regime):\n" + "\n".join(violations)
+    )

@@ -98,7 +98,7 @@ def test_exact_dedup_keeps_lowest_id(spark):
 def test_ngram_jaccard_finds_near_dup(spark):
     d = docs_df(spark)
     pairs = {(r.doc_a, r.doc_b): r.jaccard
-             for r in DD.ngram_jaccard_pairs(d, threshold=0.3).collect()}
+             for r in DD.ngram_jaccard_pairs(d, threshold=0.3, rows=d.count()).collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
     assert (1, 5) in pairs and 0.3 <= pairs[(1, 5)] < 1.0
     assert not any({a, b} == {1, 4} for a, b in pairs)
@@ -107,10 +107,12 @@ def test_ngram_jaccard_finds_near_dup(spark):
 def test_minhash_lsh_recovers_exact_dups(spark):
     d = docs_df(spark)
     pairs = {(r.doc_a, r.doc_b) for r in
-             DD.minhash_lsh_pairs(d, num_perms=16, bands=4, threshold=0.5).collect()}
+             DD.minhash_lsh_pairs(
+                 d, num_perms=16, bands=4, threshold=0.5, rows=d.count()
+             ).collect()}
     assert (1, 2) in pairs  # identical docs always share every band
     jacc = {(r.doc_a, r.doc_b) for r in
-            DD.ngram_jaccard_pairs(d, threshold=0.5).collect()}
+            DD.ngram_jaccard_pairs(d, threshold=0.5, rows=d.count()).collect()}
     assert pairs <= jacc  # LSH prunes, never admits
 
 
@@ -330,11 +332,13 @@ def test_ngram_jaccard_max_df_prunes_stop_shingles(spark):
     )
     uncapped = {
         (r.doc_a, r.doc_b)
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.1).collect()
+        for r in D.ngram_jaccard_pairs(docs, threshold=0.1, rows=4).collect()
     }
     capped = {
         (r.doc_a, r.doc_b)
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.1, max_df=2).collect()
+        for r in D.ngram_jaccard_pairs(
+            docs, threshold=0.1, max_df=2, rows=4
+        ).collect()
     }
     # every doc pairs with every other through the shared boilerplate prefix
     assert len(uncapped) == 6

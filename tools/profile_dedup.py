@@ -46,6 +46,7 @@ def main() -> None:
     sf_dir = sys.argv[1]
     which = sys.argv[2] if len(sys.argv) > 2 else "cosine"
     from go_pq_cdc_kafka_spark.catalog import load_table
+    from go_pq_cdc_kafka_spark.operators import scale
     from go_pq_cdc_kafka_spark.operators import similarity as SIM
     from go_pq_cdc_kafka_spark.session import get_spark
 
@@ -88,7 +89,7 @@ def main() -> None:
         n = e.count()
         planes = _cosine_planes(n)
         out["n"], out["planes"] = n, planes
-        pj = "merge" if n > 1_000_000 else "shuffle_hash"
+        pj = scale.regime(n).pair_join
 
         # stage 1: quantized-array table (persist barrier) materialized
         qarr = F.transform(
@@ -136,7 +137,7 @@ def main() -> None:
         # stage 4: full current-shape query
         out["t_full_current"] = _noop(
             SIM.cosine_dedup_pairs(
-                e, dim=64, threshold=0.4, planes=planes, pair_join=pj
+                e, dim=64, threshold=0.4, planes=planes, rows=n
             ).orderBy("vec_a", "vec_b")
         )
         _cold(spark)
@@ -207,7 +208,6 @@ def main() -> None:
         n = raw.count()
         out["n"] = n
         d = spread_small_scan(raw)
-        pj = "merge" if n > 1_000_000 else "shuffle_hash"
         # stage 1: shingle index materialized
         sh = DD.shingle_index(d, "text", "doc_id", 3)
         out["t_index"] = _noop(sh)
@@ -217,7 +217,7 @@ def main() -> None:
         # banded join + verification cost
         out["t_full"] = _noop(
             DD.minhash_lsh_pairs(
-                d, num_perms=16, bands=4, threshold=0.5, pair_join=pj
+                d, num_perms=16, bands=4, threshold=0.5, rows=n
             ).orderBy("doc_a", "doc_b")
         )
         _cold(spark)
